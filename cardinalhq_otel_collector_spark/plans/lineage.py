@@ -110,5 +110,5 @@ class LineageLog:
     ) -> None:
         self._append_rows([(run_id, stage, sink, rows_in, rows_out)])
 
-    def commit_many(self, run_id: str, stage: str, per_sink_counts: list[tuple[str, int]]) -> None:
+    def commit_many(self, run_id: str, stage: str, per_sink_counts: list[tuple[str | None, int]]) -> None:
         self._append_rows([(run_id, stage, s, None, n) for s, n in per_sink_counts])

@@ -30,16 +30,20 @@ Scale decisions baked in:
 from __future__ import annotations
 
 import re
+import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from ..config import PipelineConfig
-from ..datagen import role_lookup, tool_lookup
+from ..datagen import role_lookup, routing_rules, tool_lookup
 from ..operators.aggregate import interval_aggregate
 from ..operators.enrich import enrich
-from ..operators.fingerprint import attach_clusters, cluster_templates, fingerprint
+from ..operators.fingerprint import (
+    attach_clusters, cluster_templates, fingerprint, mask_template,
+)
 from ..operators.parse import parse_keyvalue
 from ..operators.redact import redact
 from ..operators.route import route
@@ -51,6 +55,7 @@ __all__ = [
     "slim_facts",
     "run_pipeline",
     "read_routed_with_clusters",
+    "routed_partition_cols",
     "ROUTED_TABLE",
     "AGG_TABLE",
     "CLUSTERS_TABLE",
@@ -72,6 +77,15 @@ def slim_facts(df: DataFrame) -> DataFrame:
 ROUTED_TABLE = "routed"
 AGG_TABLE = "sink_aggregates"
 CLUSTERS_TABLE = "template_clusters"
+
+
+def routed_partition_cols(granularity: str) -> list[str]:
+    """Partition columns of the batch and streaming routed tables alike:
+    sink, then the time columns ``add_time_partitions`` derives."""
+    return ["sink", "p_date"] + {"hour": ["p_hour"], "minute": ["p_hour", "p_minute"]}.get(
+        granularity, []
+    )
+
 
 def _tz_hour_aligned(tz: str) -> bool:
     """True iff date_format-derived p_date/p_hour buckets coincide with
@@ -179,9 +193,12 @@ def run_pipeline(
     fail_after_stage: str | None = None,
     tools: DataFrame | None = None,
     roles: DataFrame | None = None,
-    instrument_substages: bool = False,
 ) -> dict:
-    """Run (or resume) the full pipeline. Returns a summary dict.
+    """Run (or resume) the full pipeline. Returns a summary dict:
+    ``run_id``, ``stages_run``, ``stages_skipped`` and per-stage wall
+    seconds in ``timings``. Stages run in the order routed_write,
+    clusters_write, aggregates_write, then marshal_write when
+    ``config.marshal_sinks`` is non-empty.
 
     Idempotence contract: sink tables are keyed by the pipeline identity,
     not the run — a stage is (re)written atomically (overwrite) and its
@@ -189,27 +206,23 @@ def run_pipeline(
     resumed run skips stages already committed for that run_id, so a
     mid-run crash + rerun converges to the same sink state as a clean run
     (F5.7 golden; design.md:51 dedup contract).
+
+    ``fail_after_stage`` (a stage of this run) raises after that stage
+    completes or is skipped — the crash half of the resume golden.
     """
-    from ..datagen import routing_rules
-
     config = (config or PipelineConfig(rules=routing_rules())).validate()
-    run_id = run_id or uuid.uuid4().hex
-    lineage = LineageLog(catalog)
-    done = lineage.committed_stages(run_id) if resume else set()
+    sinks = [r["sink"] for r in config.rules] + [config.default_sink]
 
-    import time as _time
-
-    decorated = slim_facts(
-        decorate(transcripts, config, tools=tools, roles=roles, cluster=False)
-    )
-    if config.salt_partitions > 0:
-        # bound partition size under hot conversations: spread each conv's
-        # turns over salt buckets; sink stays the leading key so the
-        # partitioned write still clusters by sink.
-        decorated = decorated.repartition(
-            F.col("sink"),
-            F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(config.salt_partitions)),
+    def write_per_sink(frame: DataFrame, table: str, partition_by: list[str]) -> list:
+        # per-sink row counts via observed metrics ON the write job itself —
+        # no second scan of the written table (sink labels are closed over
+        # the rule table, so the metric set is static)
+        obs = Observation()
+        frame = frame.observe(
+            obs, *[F.count(F.when(F.col("sink") == s, 1)).alias(s) for s in sinks]
         )
+        catalog.write(frame, table, partition_by=partition_by)
+        return [(s, n) for s, n in obs.get.items() if n > 0]
 
     # Staged-table design: the routed table is written in ONE pass and then
     # serves as the materialization for every downstream stage (cluster map,
@@ -222,53 +235,28 @@ def run_pipeline(
     # separate tiny dimension table instead of a column burned into the
     # fact rows: deriving it costs O(distinct templates), joining it back
     # at read time is a broadcast, and re-clustering never rewrites facts.
-    summary: dict = {"run_id": run_id, "stages_run": [], "stages_skipped": [], "timings": {}}
+    # Each writer returns the (sink, rows_out) pairs its stage commits.
 
-    # ---- S6: single-pass fan-out write ------------------------------------
-    if STAGE_ROUTED in done:
-        summary["stages_skipped"].append(STAGE_ROUTED)
-    else:
-        _t0 = _time.perf_counter()
-        routed = add_time_partitions(decorated, granularity=config.partition_granularity)
-        part_cols = ["sink", "p_date"] + (
-            ["p_hour"] if config.partition_granularity in ("hour", "minute") else []
-        ) + (["p_minute"] if config.partition_granularity == "minute" else [])
-        # per-sink row counts via observed metrics ON the write job itself —
-        # no second scan of the written table (sink labels are closed over
-        # the rule table, so the metric set is static)
-        from pyspark.sql import Observation
-
-        sinks = [r["sink"] for r in config.rules] + [config.default_sink]
-        obs = Observation()
-        routed = routed.observe(
-            obs, *[F.count(F.when(F.col("sink") == s, 1)).alias(s) for s in sinks]
+    def write_routed() -> list:
+        # ---- S6: single-pass fan-out write ---------------------------------
+        decorated = slim_facts(
+            decorate(transcripts, config, tools=tools, roles=roles, cluster=False)
         )
-        if instrument_substages:
-            # Diagnostic (bench --scaling only, never the default path): run
-            # the identical decorate chain into a noop sink FIRST to time the
-            # scan+parse+route compute alone, so the stage account separates
-            # "CPU that should scale with cores" from "parquet encode + file
-            # commit". Doubles the stage's work — that is the price of the
-            # measurement, and the timed headline run keeps this off.
-            _tc = _time.perf_counter()
-            decorated.write.format("noop").mode("overwrite").save()
-            summary["timings"]["routed_compute"] = round(_time.perf_counter() - _tc, 3)
-        _tw = _time.perf_counter()
-        catalog.write(routed, ROUTED_TABLE, partition_by=part_cols)
-        if instrument_substages:
-            summary["timings"]["routed_write_commit"] = round(_time.perf_counter() - _tw, 3)
-        per_sink = [(s, n) for s, n in obs.get.items() if n > 0]
-        lineage.commit_many(run_id, STAGE_ROUTED, per_sink)
-        summary["stages_run"].append(STAGE_ROUTED)
-        summary["timings"][STAGE_ROUTED] = round(_time.perf_counter() - _t0, 3)
-    if fail_after_stage == STAGE_ROUTED:
-        raise RuntimeError("injected failure after routed_write")
+        if config.salt_partitions > 0:
+            # bound partition size under hot conversations: spread each conv's
+            # turns over salt buckets; sink stays the leading key so the
+            # partitioned write still clusters by sink.
+            decorated = decorated.repartition(
+                F.col("sink"),
+                F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(config.salt_partitions)),
+            )
+        routed = add_time_partitions(decorated, granularity=config.partition_granularity)
+        return write_per_sink(
+            routed, ROUTED_TABLE, routed_partition_cols(config.partition_granularity)
+        )
 
-    # ---- S2 pass 2: template→cluster dimension table -----------------------
-    if STAGE_CLUSTERS in done:
-        summary["stages_skipped"].append(STAGE_CLUSTERS)
-    else:
-        _t0 = _time.perf_counter()
+    def write_clusters() -> list:
+        # ---- S2 pass 2: template→cluster dimension table --------------------
         # The routed facts already carry ``fingerprint`` (pass 1), so the
         # fact-side work here is ONE hash aggregation: a representative
         # text per fingerprint (min — deterministic). Only those ~|distinct
@@ -277,10 +265,6 @@ def run_pipeline(
         # re-masking all rows (3 regexes × 10^12 texts) would buy nothing.
         # persist() the tiny result: the clustering size-probe and the
         # final join both consume it.
-        from pyspark.storagelevel import StorageLevel
-
-        from ..operators.fingerprint import mask_template
-
         reps = (
             catalog.read(ROUTED_TABLE)
             .select("fingerprint", "text")
@@ -292,26 +276,16 @@ def run_pipeline(
             .select("template", "fingerprint")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        mapping = cluster_templates(templates)
-        from pyspark.sql import Observation
-
-        obs_c = Observation()
-        mapping = mapping.select("template", "fingerprint", "cluster_id").observe(
-            obs_c, F.count(F.lit(1)).alias("n")
-        )
+        obs = Observation()
+        mapping = cluster_templates(templates).select(
+            "template", "fingerprint", "cluster_id"
+        ).observe(obs, F.count(F.lit(1)).alias("n"))
         catalog.write(mapping, CLUSTERS_TABLE)
-        lineage.commit(run_id, STAGE_CLUSTERS, rows_out=obs_c.get["n"])
         templates.unpersist()
-        summary["stages_run"].append(STAGE_CLUSTERS)
-        summary["timings"][STAGE_CLUSTERS] = round(_time.perf_counter() - _t0, 3)
-    if fail_after_stage == STAGE_CLUSTERS:
-        raise RuntimeError("injected failure after clusters_write")
+        return [(None, obs.get["n"])]
 
-    # ---- S7: per-sink windowed aggregate counts ----------------------------
-    if STAGE_AGG in done:
-        summary["stages_skipped"].append(STAGE_AGG)
-    else:
-        _t0 = _time.perf_counter()
+    def write_aggregates() -> list:
+        # ---- S7: per-sink windowed aggregate counts -------------------------
         facts_all = catalog.read(ROUTED_TABLE)
         if (
             config.agg_interval_seconds == 3600
@@ -362,57 +336,57 @@ def run_pipeline(
             aggs = interval_aggregate(
                 facts, keys=["sink", "conv_id", "tool"], interval=config.agg_interval
             )
-        from pyspark.sql import Observation
+        return write_per_sink(aggs, AGG_TABLE, ["sink"])
 
-        sinks = [r["sink"] for r in config.rules] + [config.default_sink]
-        obs_a = Observation()
-        aggs = aggs.observe(
-            obs_a, *[F.count(F.when(F.col("sink") == s, 1)).alias(s) for s in sinks]
+    def write_marshal() -> list:
+        # ---- S6m: optional sink-boundary marshal stage ----------------------
+        # exporter.go:48-66 shape (marshal → partition → upload per sub-batch):
+        # each configured sink's routed facts are rendered in that sink's wire
+        # format and written as time-partitioned files next to the tables. Off
+        # by default — a sink that consumes parquet directly needs no marshal.
+        # Reads are partition-pruned (sink is the leading partition key of the
+        # routed table), so each marshal scans only its own sink's bytes.
+        per_sink = []
+        for sink, fmt in sorted(config.marshal_sinks.items()):
+            facts = catalog.read(ROUTED_TABLE).where(F.col("sink") == sink)
+            obs = Observation()
+            out = marshal_routed(facts, fmt, sink).observe(obs, F.count(F.lit(1)).alias("n"))
+            table = f"{MARSHAL_TABLE_PREFIX}{sink}"
+            if fmt == "otlp_proto":
+                # wire bytes: parquet binary column (text can't hold them)
+                catalog.write(out, table, partition_by=["p_date"])
+            else:
+                # line formats: newline-delimited text objects, one
+                # leaf dir per p_date — the upload layout shape
+                out.write.mode("overwrite").partitionBy("p_date").text(catalog.path(table))
+            per_sink.append((sink, obs.get["n"]))
+        return per_sink
+
+    stages = [
+        (STAGE_ROUTED, write_routed),
+        (STAGE_CLUSTERS, write_clusters),
+        (STAGE_AGG, write_aggregates),
+    ] + ([(STAGE_MARSHAL, write_marshal)] if config.marshal_sinks else [])
+    names = [name for name, _ in stages]
+    if fail_after_stage is not None and fail_after_stage not in names:
+        raise ValueError(
+            f"fail_after_stage={fail_after_stage!r} is not a stage of this run: {names}"
         )
-        catalog.write(aggs, AGG_TABLE, partition_by=["sink"])
-        per_sink = [(s, n) for s, n in obs_a.get.items() if n > 0]
-        lineage.commit_many(run_id, STAGE_AGG, per_sink)
-        summary["stages_run"].append(STAGE_AGG)
-        summary["timings"][STAGE_AGG] = round(_time.perf_counter() - _t0, 3)
-    if fail_after_stage == STAGE_AGG:
-        raise RuntimeError("injected failure after aggregates_write")
 
-    # ---- S6m: optional sink-boundary marshal stage --------------------------
-    # exporter.go:48-66 shape (marshal → partition → upload per sub-batch):
-    # each configured sink's routed facts are rendered in that sink's wire
-    # format and written as time-partitioned files next to the tables. Off
-    # by default — a sink that consumes parquet directly needs no marshal.
-    # Reads are partition-pruned (sink is the leading partition key of the
-    # routed table), so each marshal scans only its own sink's bytes.
-    if config.marshal_sinks:
-        if STAGE_MARSHAL in done:
-            summary["stages_skipped"].append(STAGE_MARSHAL)
+    run_id = run_id or uuid.uuid4().hex
+    lineage = LineageLog(catalog)
+    done = lineage.committed_stages(run_id) if resume else set()
+    summary: dict = {"run_id": run_id, "stages_run": [], "stages_skipped": [], "timings": {}}
+    for stage, write in stages:
+        if stage in done:
+            summary["stages_skipped"].append(stage)
         else:
-            _t0 = _time.perf_counter()
-            from pyspark.sql import Observation
-
-            per_sink = []
-            for sink, fmt in sorted(config.marshal_sinks.items()):
-                facts = catalog.read(ROUTED_TABLE).where(F.col("sink") == sink)
-                out = marshal_routed(facts, fmt, sink)
-                obs_m = Observation()
-                out = out.observe(obs_m, F.count(F.lit(1)).alias("n"))
-                table = f"{MARSHAL_TABLE_PREFIX}{sink}"
-                if fmt == "otlp_proto":
-                    # wire bytes: parquet binary column (text can't hold them)
-                    catalog.write(out, table, partition_by=["p_date"])
-                else:
-                    # line formats: newline-delimited text objects, one
-                    # leaf dir per p_date — the upload layout shape
-                    (
-                        out.write.mode("overwrite")
-                        .partitionBy("p_date")
-                        .text(catalog.path(table))
-                    )
-                per_sink.append((sink, obs_m.get["n"]))
-            lineage.commit_many(run_id, STAGE_MARSHAL, per_sink)
-            summary["stages_run"].append(STAGE_MARSHAL)
-            summary["timings"][STAGE_MARSHAL] = round(_time.perf_counter() - _t0, 3)
+            t0 = time.perf_counter()
+            lineage.commit_many(run_id, stage, write())
+            summary["stages_run"].append(stage)
+            summary["timings"][stage] = round(time.perf_counter() - t0, 3)
+        if stage == fail_after_stage:
+            raise RuntimeError(f"injected failure after {stage}")
     return summary
 
 

@@ -42,6 +42,12 @@ def build_spark(
     ``cores`` defaults to $SPARK_GRAFT_CPUS (driver contract) else ``*``.
     On a real cluster this function is still correct: ``master`` is only
     forced when no master is configured externally (spark-submit wins).
+
+    ``extra_conf`` is applied after the defaults below, so it is the one
+    way to override any of them — e.g. the input split size
+    (``spark.sql.files.maxPartitionBytes``, default 16m) or the parquet
+    zstd level (``spark.hadoop.parquet.compression.codec.zstd.level``,
+    default 1).
     """
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -85,24 +91,14 @@ def build_spark(
         # a few MB-to-tens-of-MB per file, so the 128 MB default packs the
         # whole input into a handful of splits and leaves most cores idle
         # through the scan stage (openCost charges 4 MB per file on top).
-        # 16 MB matches splits to local core counts. Scale-dependent and
-        # env-overridable: on a real cluster scanning TB-sized tables set
-        # SPARK_GRAFT_MAX_PARTITION_BYTES=512m..1g (guide §6/§9 — fewer,
-        # larger map tasks feeding each shuffle).
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"),
-        )
+        # 16 MB matches splits to local core counts; a cluster scanning
+        # TB-sized tables wants 512m..1g (guide §6/§9) via ``extra_conf``.
+        .config("spark.sql.files.maxPartitionBytes", "16m")
         # zstd encode effort for parquet writes (guide §6): the default
         # level 3 spends ~15% more write-stage CPU than level 1 on this
         # corpus for no size win (measured on the pipeline bench: routed
         # stage 17.2s -> 14.5s, output bytes 94.8MB -> 90.8MB at level 1).
-        # Env-overridable for deployments that prefer deeper compression
-        # on cold archival tables.
-        .config(
-            "spark.hadoop.parquet.compression.codec.zstd.level",
-            os.environ.get("SPARK_GRAFT_PARQUET_ZSTD_LEVEL", "1"),
-        )
+        .config("spark.hadoop.parquet.compression.codec.zstd.level", "1")
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)

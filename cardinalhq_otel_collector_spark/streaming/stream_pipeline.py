@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import PipelineConfig
-from ..plans.pipeline import decorate, slim_facts
+from ..plans.pipeline import decorate, routed_partition_cols, slim_facts
 from ..sources.catalog import add_time_partitions
 
 __all__ = ["TRANSCRIPT_SCHEMA", "stream_transcripts", "run_streaming_pipeline", "streaming_dedup", "streaming_sessions", "stream_stream_interval_join"]
@@ -92,7 +92,7 @@ def run_streaming_pipeline(
         routed.writeStream.format("parquet")
         .option("path", os.path.join(out_dir, "routed_stream"))
         .option("checkpointLocation", os.path.join(out_dir, "_chk_routed"))
-        .partitionBy("sink", "p_date")
+        .partitionBy(*routed_partition_cols(config.partition_granularity))
         .outputMode("append")
         .trigger(**trigger)
         .start()

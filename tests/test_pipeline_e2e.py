@@ -134,30 +134,73 @@ def test_lineage_consistency(pipeline_state):
         assert per_sink[("routed_write", sink)] == n
 
 
-def test_idempotent_resume(spark, transcripts_df, tmp_path, warehouse):
-    """Crash after the routed write, resume with the same run_id → final
-    state identical to a clean run; routed stage not re-executed."""
+# every stage of a marshal run, in order, with a table it writes
+STAGE_TABLES = {
+    "routed_write": ROUTED_TABLE,
+    "clusters_write": CLUSTERS_TABLE,
+    "aggregates_write": AGG_TABLE,
+    "marshal_write": "marshaled_errors",
+}
+RESUME_STAGES = list(STAGE_TABLES)
+
+
+def _resume_config() -> PipelineConfig:
+    return PipelineConfig(
+        rules=routing_rules(), marshal_sinks={"errors": "body", "default": "sumo_ic"}
+    ).validate()
+
+
+def _lineage_rows(catalog, run_id: str) -> list:
+    rows = LineageLog(catalog).read().filter(F.col("run_id") == run_id).collect()
+    return sorted((r["stage"], r["sink"] or "", r["rows_out"]) for r in rows)
+
+
+@pytest.fixture(scope="module")
+def clean_run(spark, transcripts_df, tmp_path_factory):
     from cardinalhq_otel_collector_spark.sources.catalog import Catalog
 
-    with pytest.raises(RuntimeError, match="injected failure"):
+    clean = Catalog(spark, str(tmp_path_factory.mktemp("clean")))
+    run_pipeline(spark, transcripts_df, clean, config=_resume_config(), run_id="run-y")
+    return clean
+
+
+@pytest.mark.parametrize("stage", RESUME_STAGES)
+def test_idempotent_resume(spark, transcripts_df, warehouse, clean_run, stage):
+    """Crash after any stage, resume with the same run_id → final state and
+    lineage identical to a clean run; committed stages not re-executed."""
+    cfg = _resume_config()
+    with pytest.raises(RuntimeError, match=f"injected failure after {stage}"):
         run_pipeline(
-            spark, transcripts_df, warehouse, run_id="run-x",
-            fail_after_stage="routed_write",
+            spark, transcripts_df, warehouse, config=cfg, run_id="run-x",
+            fail_after_stage=stage,
         )
-    # mid-run state: routed committed, aggregates absent
-    assert warehouse.exists(ROUTED_TABLE)
-    assert not warehouse.exists(AGG_TABLE)
+    cut = RESUME_STAGES.index(stage) + 1
+    # mid-run state: the stages up to the failure written, the rest absent
+    for i, name in enumerate(RESUME_STAGES):
+        assert warehouse.exists(STAGE_TABLES[name]) == (i < cut), name
 
-    summary = run_pipeline(spark, transcripts_df, warehouse, run_id="run-x", resume=True)
-    assert summary["stages_skipped"] == ["routed_write"]
-    assert summary["stages_run"] == ["clusters_write", "aggregates_write"]
+    summary = run_pipeline(
+        spark, transcripts_df, warehouse, config=cfg, run_id="run-x", resume=True
+    )
+    assert summary["stages_skipped"] == RESUME_STAGES[:cut]
+    assert summary["stages_run"] == RESUME_STAGES[cut:]
 
-    clean = Catalog(spark, str(tmp_path / "clean"))
-    run_pipeline(spark, transcripts_df, clean, run_id="run-y")
+    assert _lineage_rows(warehouse, "run-x") == _lineage_rows(clean_run, "run-y")
     for table in (ROUTED_TABLE, AGG_TABLE, CLUSTERS_TABLE):
         a = sorted(map(tuple, warehouse.read(table).drop("p_date", "p_hour").collect()))
-        b = sorted(map(tuple, clean.read(table).drop("p_date", "p_hour").collect()))
+        b = sorted(map(tuple, clean_run.read(table).drop("p_date", "p_hour").collect()))
         assert a == b
+
+
+def test_fail_after_unknown_stage_raises(spark, transcripts_df, warehouse):
+    """A misspelt stage, or one this run does not have (marshal_write with
+    no marshal_sinks), is rejected before any stage writes."""
+    for name in ("routed_writ", "marshal_write"):
+        with pytest.raises(ValueError, match="not a stage of this run"):
+            run_pipeline(
+                spark, transcripts_df, warehouse, run_id="run-bad", fail_after_stage=name
+            )
+    assert not warehouse.exists(ROUTED_TABLE)
 
 
 def test_rerun_same_run_id_is_noop(spark, transcripts_df, warehouse):

@@ -196,15 +196,27 @@ def test_remove_high_df_tokens_matches_reassembly_reference(spark):
     ]
     rows.append((60, "w0"))  # single-token doc; may come out empty
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    # exact DF boundary: 60 docs at ratio 0.5 -> 'edge' in exactly 30 docs
+    # is kept (df <= 30), 'over' in 31 docs is removed
+    boundary = spark.createDataFrame(
+        [
+            (i, " ".join([f"u{i}"] + ["edge"] * (i < 30) + ["over"] * (i < 31)))
+            for i in range(60)
+        ],
+        "doc_id long, text string",
+    )
+    filtered = remove_high_df_tokens(boundary, max_df_ratio=0.5).collect()
+    assert all(("edge" in r["text_filtered"].split()) == (r["doc_id"] < 30) for r in filtered)
+    assert not any("over" in r["text_filtered"].split() for r in filtered)
 
-    for ratio in (0.3, 0.78):
-        new = remove_high_df_tokens(df, max_df_ratio=ratio)
+    for docs, ratio in ((df, 0.3), (df, 0.78), (boundary, 0.5)):
+        new = remove_high_df_tokens(docs, max_df_ratio=ratio)
 
-        words = df.select(
+        words = docs.select(
             "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "w")
         )
         dfreq = words.groupBy("w").agg(F.countDistinct("doc_id").alias("nd"))
-        total = df.select(F.count(F.lit(1)).alias("tot"))
+        total = docs.select(F.count(F.lit(1)).alias("tot"))
         kept = (
             words.join(F.broadcast(dfreq), "w")
             .crossJoin(F.broadcast(total))

@@ -4,55 +4,68 @@ from pyspark.sql import functions as F
 
 from cardinalhq_otel_collector_spark.config import PipelineConfig
 from cardinalhq_otel_collector_spark.datagen import routing_rules, transcripts
-from cardinalhq_otel_collector_spark.plans.pipeline import decorate
+from cardinalhq_otel_collector_spark.plans.pipeline import ROUTED_TABLE, decorate, run_pipeline
 from cardinalhq_otel_collector_spark.streaming.stream_pipeline import (
     run_streaming_pipeline,
 )
 
 
 def test_streaming_matches_batch(spark, transcripts_df, tmp_path):
+    from cardinalhq_otel_collector_spark.sources.catalog import Catalog
+
     src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
     # several files so multiple micro-batches happen
     transcripts_df.repartition(6).write.parquet(src)
 
-    run_streaming_pipeline(spark, src, out, watermark="1 minute")
+    for granularity in ("day", "hour"):
+        out = str(tmp_path / f"out_{granularity}")
+        cfg = PipelineConfig(
+            rules=routing_rules(), partition_granularity=granularity
+        ).validate()
+        run_streaming_pipeline(spark, src, out, config=cfg, watermark="1 minute")
 
-    routed = spark.read.option("basePath", os.path.join(out, "routed_stream")).parquet(
-        os.path.join(out, "routed_stream")
-    )
-    cfg = PipelineConfig(rules=routing_rules()).validate()
-    batch = decorate(transcripts_df, cfg, cluster=False)
-
-    # stateless path: streaming output ≡ batch output, row for row
-    a = sorted(
-        (r["conv_id"], r["turn_idx"], r["sink"], r["text"]) for r in routed.collect()
-    )
-    b = sorted(
-        (r["conv_id"], r["turn_idx"], r["sink"], r["text"]) for r in batch.collect()
-    )
-    assert a == b
-
-    # windowed aggregates: every emitted (closed) window matches the batch
-    # aggregate exactly; only windows still open at end-of-stream may be
-    # missing (append-mode watermark semantics)
-    aggs = spark.read.parquet(os.path.join(out, "agg_stream"))
-    emitted = {
-        (r["bucket_start"], r["sink"], r["conv_id"], r["tool"]): r["n"]
-        for r in aggs.collect()
-    }
-    expected = {
-        (r["bucket_start"], r["sink"], r["conv_id"], r["tool"]): r["n"]
-        for r in batch.groupBy(
-            F.window("ts", cfg.agg_interval).alias("w"), "sink", "conv_id", "tool"
+        routed = spark.read.option("basePath", os.path.join(out, "routed_stream")).parquet(
+            os.path.join(out, "routed_stream")
         )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("bucket_start"), "sink", "conv_id", "tool", "n")
-        .collect()
-    }
-    assert len(emitted) > 0
-    for k, n in emitted.items():
-        assert expected[k] == n
+        batch = decorate(transcripts_df, cfg, cluster=False)
+
+        # stateless path: streaming output ≡ batch output, row for row
+        a = sorted(
+            (r["conv_id"], r["turn_idx"], r["sink"], r["text"]) for r in routed.collect()
+        )
+        b = sorted(
+            (r["conv_id"], r["turn_idx"], r["sink"], r["text"]) for r in batch.collect()
+        )
+        assert a == b
+
+        # schema-identical twins: the batch routed table has the same
+        # columns, partition columns included, with the same read-back types
+        wh = Catalog(spark, str(tmp_path / f"wh_{granularity}"))
+        run_pipeline(spark, transcripts_df, wh, config=cfg, run_id=granularity)
+        assert routed.dtypes == wh.read(ROUTED_TABLE).dtypes, granularity
+        if granularity == "hour":
+            assert dict(routed.dtypes)["p_hour"] == "int"
+
+        # windowed aggregates: every emitted (closed) window matches the batch
+        # aggregate exactly; only windows still open at end-of-stream may be
+        # missing (append-mode watermark semantics)
+        aggs = spark.read.parquet(os.path.join(out, "agg_stream"))
+        emitted = {
+            (r["bucket_start"], r["sink"], r["conv_id"], r["tool"]): r["n"]
+            for r in aggs.collect()
+        }
+        expected = {
+            (r["bucket_start"], r["sink"], r["conv_id"], r["tool"]): r["n"]
+            for r in batch.groupBy(
+                F.window("ts", cfg.agg_interval).alias("w"), "sink", "conv_id", "tool"
+            )
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select(F.col("w.start").alias("bucket_start"), "sink", "conv_id", "tool", "n")
+            .collect()
+        }
+        assert len(emitted) > 0
+        for k, n in emitted.items():
+            assert expected[k] == n
 
 
 def test_streaming_restart_is_exactly_once(spark, tmp_path):
